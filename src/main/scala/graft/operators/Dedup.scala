@@ -784,22 +784,14 @@ object Dedup {
     lshBuckets(minhashSignatures(shinglesHashed(corpusDocs)))
       .write.mode("overwrite").parquet(path)
 
-  /** Once-per-corpus index materialization under the warehouse dir,
-    * keyed by a hash of the source dir (same contract as
-    * RelationalExt.bucketedTables): a fresh session finds complete
-    * index files on disk and reuses them.
+  /** Once-per-corpus index materialization (a Warehouse artifact):
+    * a fresh session reuses the stored buckets of its corpus.
     */
-  def dedupIndexDir(s: SparkSession, d: String,
-      corpusDocs: => DataFrame): String = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dir = new org.apache.hadoop.fs.Path(wh, s"graft_dedup_idx_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-      writeDedupIndex(corpusDocs, dir.toString)
-    dir.toString
-  }
+  def dedupIndexDir(s: SparkSession, d: String, corpusDocs: => DataFrame): String =
+    graft.sources.Warehouse.artifact(s, d, "dedup_idx", Seq("documents.parquet"),
+        s"perm$NumPerm|bands$Bands") { p =>
+      writeDedupIndex(corpusDocs, p.toString)
+    }.toString
 
   /** The daily-ingest entry: the newest 40% of documents deduped
     * against the older 60% corpus. Test-pinned to equal the full
@@ -896,7 +888,7 @@ object Dedup {
       val split = incrementSplit(docs)
       val corpus = docs.filter(col("doc_id") < split)
       val idx = dedupIndexDir(s, d, corpus)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_idx")
+      val tmp = org.apache.spark.sql.graft.Scratch.dir("graft_stream_idx")
       try {
         val srcDir = s"$tmp/src"; val sinkDir = s"$tmp/sink"
         plantedIncrement(docs, split).repartition(2)

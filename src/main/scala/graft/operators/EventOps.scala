@@ -712,7 +712,7 @@ object EventOps {
       |SELECT event_type, event_id, round(value, 2) AS value
       |FROM r WHERE rk <= 5
       |ORDER BY event_type, event_id""".stripMargin) { (s, d) =>
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_topk")
+    val tmp = org.apache.spark.sql.graft.Scratch.dir("graft_stream_topk")
     try {
       val srcDir = s"$tmp/src"
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -22,11 +22,9 @@ import graft.sources.Tables
   */
 object Graph {
 
-  /** Once-per-corpus persisted edge artifact under the warehouse dir
-    * (the dedupIndexDir / bucketedTables contract, keyed by a hash of
-    * the source dir): ~40 graph entries share these three edge
-    * relations, and each used to re-derive the same orders⋈lineitem
-    * join from the base tables — at 100 TB that's the full corpus
+  /** Once-per-corpus persisted edge artifact (Warehouse.staged): ~40
+    * graph entries share these three edge relations, and each used
+    * to re-derive the same orders⋈lineitem join from the base tables — at 100 TB that's the full corpus
     * join paid ~40 times for an |edges|-sized result. One graph
     * "ingest" writes each projection to parquet; every query after
     * reads the slim edge table. A fresh session finds complete files
@@ -34,8 +32,6 @@ object Graph {
     */
   private def stagedEdges(s: SparkSession, d: String, name: String)
       (build: => DataFrame): DataFrame =
-    // content-fingerprinted once-per-corpus artifact (Warehouse):
-    // regenerating corpus data in place invalidates the derived edges
     graft.sources.Warehouse.staged(s, d, s"edges_$name",
       Seq("lineitem.parquet", "orders.parquet",
         "customer.parquet", "supplier.parquet"))(build)

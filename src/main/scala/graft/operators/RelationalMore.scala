@@ -82,13 +82,7 @@ object RelationalMore {
       .orderBy(col("o_orderstatus"))
   }
 
-  // hash of the source dir so different SFs coexist in the warehouse
-  private def sketchTableDir(s: SparkSession, d: String): org.apache.hadoop.fs.Path = {
-    val h = Integer.toHexString(d.hashCode)
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")),
-      s"graft_hll_$h")
-  }
+  private val HllLgK = 12
 
   /** Builds (once) the per-month HLL sketch table over orders:
     * one 2^12-register Datasketches HLL per (month) of o_custkey.
@@ -96,18 +90,13 @@ object RelationalMore {
     * partition — that answers any distinct-count rollup without
     * rescanning the fact table.
     */
-  def hllSketchTable(s: SparkSession, d: String): DataFrame = synchronized {
-    val dir = sketchTableDir(s, d)
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+  def hllSketchTable(s: SparkSession, d: String): DataFrame =
+    graft.sources.Warehouse.staged(s, d, "hll", Seq("orders.parquet"), s"lgk$HllLgK") {
       Tables.orders(s, d)
         .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-        .agg(hll_sketch_agg(col("o_custkey"), lit(12)).as("sk"),
+        .agg(hll_sketch_agg(col("o_custkey"), lit(HllLgK)).as("sk"),
           count(lit(1)).as("n_orders"))
-        .write.mode("overwrite").parquet(dir.toString)
     }
-    s.read.parquet(dir.toString)
-  }
 
   /** Distinct customers per quarter answered from the STORED sketch
     * table alone: `hll_union_agg` merges the month sketches (sketch
@@ -501,8 +490,7 @@ object RelationalMore {
       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val cutoff = "1998-01-01"
     val mvPath = mvCache.computeIfAbsent(d, { dir =>
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_mv_monthly").toString
+      val p = org.apache.spark.sql.graft.Scratch.dir("graft_mv_monthly").toString
       Tables.orders(s, dir)
         .filter(col("o_orderdate") < lit(cutoff))
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("mo"))

@@ -262,36 +262,34 @@ object Similarity {
     * to be stable, not optimal). O(NLists·dim) to the driver.
     *
     * An IVF index is built once at ingest and reused by every query,
-    * so the fitted centroids are cached per corpus.
+    * so the fitted centroids are cached per corpus — keyed, like the
+    * codebook caches, by the ann artifact's final dir (`annDir`), so
+    * a corpus regenerated in place misses them.
     */
   private val quantizerCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
 
-  /** Warehouse path of the persisted ANN index for a source dir
-    * (same source-dir-hash contract as the other index/table names).
-    */
-  private def annIndexPath(s: SparkSession, d: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    new org.apache.hadoop.fs.Path(wh, s"graft_ann_idx_$h").toString
-  }
+  /** The persisted ANN index's base table and layout constants. */
+  private val AnnTables = Seq("embeddings.parquet")
+  private def annSalt = s"dim$Dim|lists$NLists|pq${PqM}x$PqK|sample4096|iters3"
 
-  /** Read `sub` of the persisted index iff its _SUCCESS exists —
+  /** Final warehouse dir of corpus `d`'s ANN index (built or not). */
+  private def annDir(s: SparkSession, d: String): String =
+    graft.sources.Warehouse.locate(s, d, "ann_idx", AnnTables, annSalt).toString
+
+  /** Read `sub` of corpus `d`'s persisted index iff it is built —
     * fitted index artifacts are reused by FRESH sessions, not refit
-    * per process (fits are deterministic, so a load equals a refit;
-    * shape is validated in case index constants changed since the
-    * files were written).
+    * per process (fits are deterministic, so a load equals a refit).
     */
-  private def loadIndexPart(s: SparkSession, d: String, sub: String):
-      Option[Array[org.apache.spark.sql.Row]] = {
-    val dir = new org.apache.hadoop.fs.Path(s"${annIndexPath(s, d)}/$sub")
-    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-      Some(s.read.parquet(dir.toString).collect())
+  private def loadIndexPart(s: SparkSession, dir: String, sub: String):
+      Option[Array[org.apache.spark.sql.Row]] =
+    if (graft.sources.Warehouse.isBuilt(s, new org.apache.hadoop.fs.Path(dir)))
+      Some(s.read.parquet(s"$dir/$sub").collect())
     else None
-  }
 
+  /** `cacheKey`: the corpus dir whose ANN artifact keys the cache and
+    * serves a stored fit ("" = always fit, uncached).
+    */
   def coarseCentroids(e: DataFrame, cacheKey: String = ""): Array[Array[Double]] = {
     def fit(): Array[Array[Double]] = {
       // a coarse quantizer needs a representative sample, not the
@@ -305,14 +303,13 @@ object Similarity {
         KMeans.ndLloyd(sample, init, iters = 3)._1
       } finally sample.unpersist(false)
     }
-    def loadOrFit(): Array[Array[Double]] =
-      loadIndexPart(e.sparkSession, cacheKey, "centroids")
-        .map(_.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-          .sortBy(_._1).map(_._2))
-        .filter(cs => cs.length == NLists && cs.forall(_.length == Dim))
-        .getOrElse(fit())
     if (cacheKey.isEmpty) fit()
-    else quantizerCache.getOrElseUpdate(cacheKey, loadOrFit())
+    else {
+      val dir = annDir(e.sparkSession, cacheKey)
+      quantizerCache.getOrElseUpdate(dir, loadIndexPart(e.sparkSession, dir, "centroids")
+        .map(_.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).map(_._2))
+        .getOrElse(fit()))
+    }
   }
 
   /** IVF ANN: assign every vector to its nearest coarse centroid
@@ -420,20 +417,27 @@ object Similarity {
       .limit(10)
   }
 
+  /** A [m][codeword][subdim] codebook cached under corpus
+    * `cacheKey`'s ANN artifact dir, loaded from its `sub` part when
+    * the artifact is built, else fitted.
+    */
+  private def cachedCodebooks(
+      cache: scala.collection.concurrent.TrieMap[String, Array[Array[Array[Double]]]],
+      s: SparkSession, cacheKey: String, sub: String)(
+      fit: => Array[Array[Array[Double]]]): Array[Array[Array[Double]]] =
+    if (cacheKey.isEmpty) fit
+    else {
+      val dir = annDir(s, cacheKey)
+      cache.getOrElseUpdate(dir, loadIndexPart(s, dir, sub).map { rows =>
+        val m = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
+        Array.tabulate(PqM, PqK)((i, j) => m((i, j)))
+      }.getOrElse(fit))
+    }
+
   def pqCodebooks(e: DataFrame, cacheKey: String = ""): Array[Array[Array[Double]]] = {
     def fit(): Array[Array[Array[Double]]] =
       fitSubspaceCodebooks(e.limit(4096).select(unit(col("v")).as("u")))
-    def loadOrFit(): Array[Array[Array[Double]]] =
-      loadIndexPart(e.sparkSession, cacheKey, "codebooks_raw")
-        .map { rows =>
-          val m = rows.map(r =>
-            (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-          if (m.size == PqM * PqK && m.values.forall(_.length == SubDim))
-            Some(Array.tabulate(PqM, PqK)((i, j) => m((i, j))))
-          else None
-        }.flatten.getOrElse(fit())
-    if (cacheKey.isEmpty) fit()
-    else pqCache.getOrElseUpdate(cacheKey, loadOrFit())
+    cachedCodebooks(pqCache, e.sparkSession, cacheKey, "codebooks_raw")(fit())
   }
 
   /** All PqM codeword ids of a vector column as c0..c{PqM-1}, via the
@@ -638,17 +642,7 @@ object Similarity {
         .withColumn("list",
           array_min(array(centroidStructs(cs, col("u0")): _*)).getField("list"))
         .select(residualExpr(cs, col("u0"), col("list")).as("u")))
-    def loadOrFit(): Array[Array[Array[Double]]] =
-      loadIndexPart(e.sparkSession, cacheKey, "codebooks")
-        .map { rows =>
-          val m = rows.map(r =>
-            (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
-          if (m.size == PqM * PqK && m.values.forall(_.length == SubDim))
-            Some(Array.tabulate(PqM, PqK)((i, j) => m((i, j))))
-          else None
-        }.flatten.getOrElse(fit())
-    if (cacheKey.isEmpty) fit()
-    else ivfPqCache.getOrElseUpdate(cacheKey, loadOrFit())
+    cachedCodebooks(ivfPqCache, e.sparkSession, cacheKey, "codebooks")(fit())
   }
 
   /** IVF-PQ ANN — the production index layout (Jégou et al.; FAISS
@@ -874,21 +868,13 @@ object Similarity {
     (cs, cb)
   }
 
-  /** Once-per-corpus index materialization under the warehouse dir
-    * (same contract as the dedup index): a fresh session reuses
-    * complete index files on disk.
+  /** Once-per-corpus index materialization (a Warehouse artifact):
+    * a fresh session reuses the stored index of its corpus.
     */
   def annIndexDir(s: SparkSession, d: String, e: => DataFrame): String =
-    synchronized {
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-      val dir = new org.apache.hadoop.fs.Path(wh, s"graft_ann_idx_$h")
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes/_SUCCESS")))
-        writeAnnIndex(s, e, dir.toString, cacheKey = d)
-      dir.toString
-    }
+    graft.sources.Warehouse.artifact(s, d, "ann_idx", AnnTables, annSalt) { p =>
+      writeAnnIndex(s, e, p.toString, cacheKey = d)
+    }.toString
 
   /** IVF-PQ search against the STORED index: codebooks load from
     * parquet (driver-side, constant-sized), the code scan reads only

@@ -486,53 +486,23 @@ object Tpch {
     * supply-side exchange at any SF (r8: AQE correctly flipped the
     * broadcast to a shuffle at sf1; bucketing removes the supply side
     * of that shuffle entirely, the way a real ingest would lay the
-    * relation out). Same content-fingerprint invalidation contract as
-    * Warehouse.staged; complete bucket files from a prior session are
-    * re-registered over their LOCATION (Spark's bucket-id file naming
-    * keeps the CLUSTERED BY honored shuffle-free).
+    * relation out). A Warehouse bucketed artifact: the bucket spec is
+    * part of its identity, so files written under another layout are
+    * never registered under this one.
     */
   private val SupplyBuckets = 32
 
   private def derivedPartSupp(s: SparkSession, d: String): DataFrame =
-    Tpch.synchronized {
-      // the LAYOUT spec is part of the identity (r9 advice): if the
-      // bucket count or cluster/sort columns ever change, the hash
-      // changes and a fresh table is built — the _SUCCESS re-register
-      // below can then never stamp new bucket metadata onto files
-      // written under an old layout (which would silently co-locate
-      // wrong rows in the exchange-free joins)
-      val salt = s"|b$SupplyBuckets|l_partkey,l_suppkey|sorted:l_partkey,l_suppkey"
-      val fp = graft.sources.Warehouse.fingerprint(s, d, Seq("lineitem.parquet")) + salt
-      val h = graft.sources.Warehouse.md5_8(fp)
-      val t = s"graft_supply_b_$h"
-      if (!s.catalog.tableExists(t)) {
-        val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val dir = new org.apache.hadoop.fs.Path(wh, t)
-        val df = Tables.lineitem(s, d)
-          .select(col("l_partkey"), col("l_suppkey"),
-            (col("l_extendedprice") / col("l_quantity")).as("unit"),
-            col("l_quantity"))
-          .groupBy(col("l_partkey"), col("l_suppkey"))
-          .agg(min(col("unit")).as("ps_supplycost"),
-            sum(col("l_quantity")).as("ps_qty"))
-        if (fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
-          s.sql(s"CREATE TABLE $t (${df.schema.toDDL}) USING parquet " +
-            s"CLUSTERED BY (l_partkey, l_suppkey) " +
-            s"SORTED BY (l_partkey, l_suppkey) INTO $SupplyBuckets BUCKETS " +
-            s"LOCATION '$dir'")
-        else
-          df.write.bucketBy(SupplyBuckets, "l_partkey", "l_suppkey")
-            .sortBy("l_partkey", "l_suppkey")
-            .mode("overwrite").saveAsTable(t)
-        // provenance for the GC sweep (covers the re-register branch
-        // too, migrating pre-r10 metaless dirs), then collect any
-        // supply table a previous corpus fingerprint left behind
-        graft.sources.Warehouse.writeMeta(s, dir, d, Seq("lineitem.parquet"), salt)
-        graft.sources.Warehouse.gcStale(s)
-      }
-      s.table(t)
-    }
+    s.table(graft.sources.Warehouse.bucketed(s, d, "supply_b", Seq("lineitem.parquet"),
+      SupplyBuckets, Seq("l_partkey", "l_suppkey")) {
+      Tables.lineitem(s, d)
+        .select(col("l_partkey"), col("l_suppkey"),
+          (col("l_extendedprice") / col("l_quantity")).as("unit"),
+          col("l_quantity"))
+        .groupBy(col("l_partkey"), col("l_suppkey"))
+        .agg(min(col("unit")).as("ps_supplycost"),
+          sum(col("l_quantity")).as("ps_qty"))
+    })
 
   private val derivedPartSuppSql: String =
     """ps AS (SELECT l_partkey, l_suppkey,

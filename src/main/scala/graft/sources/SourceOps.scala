@@ -19,11 +19,8 @@ object SourceOps {
 
   // per-process staging root: two concurrent JVMs (a test run and a
   // bench run) must not overwrite each other's roundtrip files
-  private lazy val stagingRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_io")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private lazy val stagingRoot: java.nio.file.Path =
+    org.apache.spark.sql.graft.Scratch.dir("graft_io")
 
   private def tmpDir(name: String): String =
     stagingRoot.resolve(name).toString
@@ -156,17 +153,9 @@ object SourceOps {
         round(sum(col("l_extendedprice")), 2).as("total"))
   }
 
-  /** Once-per-corpus z-ordered rewrite under the warehouse dir (the
-    * same source-dir-hash reuse contract as the bucketed tables and
-    * dedup/ANN indexes).
-    */
-  def zorderedLineitem(s: SparkSession, d: String): String = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dir = new org.apache.hadoop.fs.Path(wh, s"graft_li_zorder_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+  /** Once-per-corpus z-ordered rewrite (a Warehouse artifact). */
+  def zorderedLineitem(s: SparkSession, d: String): String =
+    Warehouse.artifact(s, d, "li_zorder", Seq("lineitem.parquet"), s"files$ZFiles") { dir =>
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
       // scale both keys into 16-bit range by their observed max
@@ -180,10 +169,8 @@ object SourceOps {
         .repartitionByRange(ZFiles, col("graft_z"))
         .sortWithinPartitions(col("graft_z"))
         .drop("graft_z")
-        .write.mode("overwrite").parquet(dir.toString)
-    }
-    dir.toString
-  }
+        .write.parquet(dir.toString)
+    }.toString
 
   /** HILBERT layout: the z-order rewrite with the Morton interleave
     * swapped for the Hilbert curve (native codegen'd HilbertIndex —
@@ -215,13 +202,8 @@ object SourceOps {
   /** Once-per-corpus Hilbert-ordered rewrite (zorderedLineitem's
     * contract with the curve swapped).
     */
-  def hilbertLineitem(s: SparkSession, d: String): String = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dir = new org.apache.hadoop.fs.Path(wh, s"graft_li_hilbert_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+  def hilbertLineitem(s: SparkSession, d: String): String =
+    Warehouse.artifact(s, d, "li_hilbert", Seq("lineitem.parquet"), s"files$ZFiles") { dir =>
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
       val (maxP, maxS) = {
@@ -235,10 +217,8 @@ object SourceOps {
         .repartitionByRange(ZFiles, col("graft_h"))
         .sortWithinPartitions(col("graft_h"))
         .drop("graft_h")
-        .write.mode("overwrite").parquet(dir.toString)
-    }
-    dir.toString
-  }
+        .write.parquet(dir.toString)
+    }.toString
 
   val ManifestFiles = 8
 
@@ -270,7 +250,7 @@ object SourceOps {
     val pruned = s.read.parquet(manDir)
       .filter(col("min_ship") <= lit(hi).cast("date") &&
         col("max_ship") >= lit(lo).cast("date"))
-      .select("file").collect().map(_.getString(0))
+      .select("file").collect().map(r => s"$dataDir/${r.getString(0)}")
     val src = if (pruned.isEmpty) s.read.parquet(dataDir)
       else s.read.parquet(pruned.toIndexedSeq: _*)
     src.filter(col("l_shipdate").between(lit(lo).cast("date"), lit(hi).cast("date")))
@@ -279,36 +259,33 @@ object SourceOps {
         round(sum(col("l_extendedprice")), 2).as("total"))
   }
 
-  /** Once-per-corpus manifest build: lineitem rewritten range-
-    * partitioned on l_shipdate (ManifestFiles files, sorted within
-    * each so every file covers a tight date interval), plus the
-    * per-file stats manifest derived in one scan of the laid-out
-    * table via the _metadata.file_path virtual column. Returns
-    * (dataDir, manifestDir); reused across runs by source-dir hash
-    * like the bucketed/z-order layouts.
+  /** Once-per-corpus manifest build (two Warehouse artifacts over the
+    * same key): lineitem rewritten range-partitioned on l_shipdate
+    * (ManifestFiles files, sorted within each so every file covers a
+    * tight date interval), plus the per-file stats manifest derived
+    * in one scan of the laid-out table. Manifest entries name files
+    * relative to the data dir (the _metadata.file_name virtual
+    * column). Returns (dataDir, manifestDir).
     */
-  def manifestLineitem(s: SparkSession, d: String): (String, String) = synchronized {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val wh = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-    val dataDir = new org.apache.hadoop.fs.Path(wh, s"graft_li_mfdata_$h")
-    val manDir = new org.apache.hadoop.fs.Path(wh, s"graft_li_manifest_$h")
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(manDir, "_SUCCESS"))) {
+  def manifestLineitem(s: SparkSession, d: String): (String, String) = {
+    val salt = s"files$ManifestFiles"
+    val data = Warehouse.artifact(s, d, "li_mfdata", Seq("lineitem.parquet"), salt) { dir =>
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice")
         .repartitionByRange(ManifestFiles, col("l_shipdate"))
         .sortWithinPartitions(col("l_shipdate"))
-        .write.mode("overwrite").parquet(dataDir.toString)
-      s.read.parquet(dataDir.toString)
-        .groupBy(col("_metadata.file_path").as("file"))
+        .write.parquet(dir.toString)
+    }
+    val manifest = Warehouse.artifact(s, d, "li_manifest", Seq("lineitem.parquet"), salt) { dir =>
+      s.read.parquet(data.toString)
+        .groupBy(col("_metadata.file_name").as("file"))
         .agg(min(col("l_shipdate")).as("min_ship"),
           max(col("l_shipdate")).as("max_ship"),
           count(lit(1)).as("n_rows"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(manDir.toString)
+        .write.parquet(dir.toString)
     }
-    (dataDir.toString, manDir.toString)
+    (data.toString, manifest.toString)
   }
 
   val GdprBuckets = 16
@@ -379,7 +356,7 @@ object SourceOps {
       |FROM events WHERE user_id % 97 <> 0
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
     val root = gdprDone.computeIfAbsent(d, { dir =>
-      val p = java.nio.file.Files.createTempDirectory("graft_gdpr").toString
+      val p = org.apache.spark.sql.graft.Scratch.dir("graft_gdpr").toString
       gdprBuild(s, dir, p)
       gdprApply(s, p)
       p
@@ -676,9 +653,9 @@ object SourceOps {
     * positives only cost IO, never correctness). Filter presence in
     * the footer metadata is asserted in ScalaTest.
     */
-  /** Once-per-corpus bloom-filtered orders layout (keyed by source
-    * dir, same reuse contract as zorderedLineitem); returns the
-    * staged path so the ScalaTest can inspect the footer.
+  /** Once-per-process bloom-filtered orders layout (keyed by source
+    * dir under the per-process staging root); returns the staged
+    * path so the ScalaTest can inspect the footer.
     */
   def bloomOrdersLayout(s: SparkSession, d: String): String = synchronized {
     val h = java.security.MessageDigest.getInstance("MD5")

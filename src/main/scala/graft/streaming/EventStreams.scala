@@ -41,7 +41,7 @@ object EventStreams {
     */
   private def stagedStream(s: SparkSession, dir: String, file: String,
       schema: StructType): (DataFrame, java.nio.file.Path) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream")
+    val tmp = org.apache.spark.sql.graft.Scratch.dir("graft_stream")
     java.nio.file.Files.createSymbolicLink(
       tmp.resolve(file), java.nio.file.Paths.get(s"$dir/$file"))
     (s.readStream.schema(schema).parquet(tmp.toString), tmp)
@@ -152,7 +152,7 @@ object EventStreams {
   def streamProgressMetrics(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (src, tmp) = eventsStream3(s, dir)
-    val chk = java.nio.file.Files.createTempDirectory("graft_progress_chk")
+    val chk = org.apache.spark.sql.graft.Scratch.dir("graft_progress_chk")
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
     val progress = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
@@ -184,7 +184,7 @@ object EventStreams {
     * maxFilesPerTrigger=1 — a genuinely multi-batch source.
     */
   private def eventsStream3(s: SparkSession, dir: String): (DataFrame, java.nio.file.Path) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream3")
+    val tmp = org.apache.spark.sql.graft.Scratch.dir("graft_stream3")
     val raw = s.read.parquet(s"$dir/events.parquet")
     raw.withColumn("slice", pmod(xxhash64(col("event_id")), lit(3)))
       .write.partitionBy("slice").mode("overwrite").parquet(tmp.toString)
@@ -355,11 +355,8 @@ object EventStreams {
 
   // per-process egress root: a concurrent test and bench JVM must not
   // overwrite each other's sink files (same reason as SourceOps)
-  private lazy val sinkRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_sink")
-    p.toFile.deleteOnExit()
-    p
-  }
+  private lazy val sinkRoot: java.nio.file.Path =
+    org.apache.spark.sql.graft.Scratch.dir("graft_sink")
 
   /** EXACTLY-ONCE file sink by idempotent batch replay — the
     * recovery contract production streaming jobs rely on: after a
@@ -379,7 +376,7 @@ object EventStreams {
     val (src, tmp) = stagedStream(s, dir, "events.parquet", rawEventSchema(s, dir))
     val events = graft.sources.Tables.normalizeEventTs(src)
     val dataDir = sinkRoot.resolve("idem_" + java.util.UUID.randomUUID().toString.take(8)).toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_idem_chk")
+    val chk = org.apache.spark.sql.graft.Scratch.dir("graft_idem_chk")
     val maxBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
     def writeBatch(batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
         id: Long): Unit =
@@ -416,7 +413,7 @@ object EventStreams {
   def streamSinkRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val (src, tmp) = eventsStream(s, dir)
     val dataDir = sinkRoot.resolve("hourly").toString
-    val chk = java.nio.file.Files.createTempDirectory("graft_sink_chk")
+    val chk = org.apache.spark.sql.graft.Scratch.dir("graft_sink_chk")
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
     try {
@@ -800,7 +797,7 @@ object EventStreams {
     val raw = s.read.parquet(s"$dir/events.parquet")
     val maxTs = graft.sources.Tables.events(s, dir)
       .agg(max(col("ts"))).collect()(0).getTimestamp(0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_late")
+    val tmp = org.apache.spark.sql.graft.Scratch.dir("graft_late")
     raw.filter(col("event_id") % 3 =!= 0)
       .coalesce(1).write.mode("append").parquet(tmp.toString)
     val src = s.readStream.schema(rawEventSchema(s, dir)).parquet(tmp.toString)
@@ -849,7 +846,7 @@ object EventStreams {
     * the per-run input row counts alongside the final aggregate.
     */
   def incrementalRuns(s: SparkSession, dir: String): (DataFrame, Seq[Long]) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_incr")
+    val root = org.apache.spark.sql.graft.Scratch.dir("graft_incr")
     val srcDir = root.resolve("src"); val sinkDir = root.resolve("sink")
     val chk = root.resolve("chk")
     val orders = graft.sources.Tables.orders(s, dir)
@@ -924,7 +921,7 @@ object EventStreams {
     */
   def streamScd2(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2")
+    val root = org.apache.spark.sql.graft.Scratch.dir("graft_scd2")
     val updDir = root.resolve("updates")
     val tgt = graft.sources.Tables.orders(s, dir).select(
       col("o_orderkey"), round(col("o_totalprice"), 2).as("price"),

@@ -50,6 +50,22 @@ object BloomBridge {
         new XxHash64(Seq(ColumnBridge.expression(key)))))
 }
 
+/** The per-process scratch root: every per-process staging dir
+  * (roundtrip files, stream sinks and checkpoints, one-per-process
+  * layouts) is created under it. Spark's Utils.createTempDir
+  * registers a RECURSIVE delete with Spark's shutdown-hook manager —
+  * File.deleteOnExit only removes dirs that are empty at exit, so it
+  * would leave every populated staging dir behind in java.io.tmpdir.
+  */
+object Scratch {
+  private lazy val root: java.nio.file.Path =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = "graft_scratch").toPath
+
+  /** A fresh dir `<root>/<prefix><random>`. */
+  def dir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(root, prefix)
+}
+
 /** Codegen'd array<double> dot product — a tight primitive loop in
   * whole-stage codegen: no boxing, no higher-order-function lambda
   * dispatch. Sequential left-to-right accumulation, matching both
